@@ -34,10 +34,15 @@ final case class EntityIndexConfig(
   * fully-materialized E1 set), so the encoding is exact — verified against an
   * in-process transcription of the Rust loops (test `ReferenceOracle`).
   *
-  * Scale notes: no driver-side state; the only shuffles are the label/alias
-  * hash-partitions and the window sorts. The dictionary self-join for type
-  * resolution (J2) reduces the right side to the distinct type ids first
-  * (types are a tiny fraction of entities), so it broadcasts.
+  * Scale notes: no driver-side state; the shuffles are the label/alias
+  * hash-partitions, the window sorts, and two type-dictionary-sized ones in
+  * type resolution (J2): the distinct type ids and the single-row type map.
+  * J2 resolves each entity's types inside its own row against the broadcast
+  * type map, so it neither regroups nor re-joins the entity rows. Spark's
+  * map lookup scans the keys, so each type reference costs O(type
+  * entities): cheap while the type dictionary stays small (n/50 entities in
+  * the synthetic dumps), a cost to revisit before dumps with millions of
+  * distinct types.
   */
 object EntityIndexBuilder {
 
@@ -47,57 +52,56 @@ object EntityIndexBuilder {
     * entity's own count (ascending, stable on input position), map ids →
     * labels dropping unknown types; `info` = last type label, else desc
     * (`lib.rs:63-72`).
+    *
+    * The last type is the resolvable one with the lexicographic-max
+    * (count, array position), a total order within an entity, so each row
+    * resolves its own `types` against ONE map of the type entities
+    * (type id → (count, label)), joined as a single-row broadcast. qids are
+    * unique (A3), so the map has no duplicate keys; a dump that repeats a
+    * qid used as a type fails the build (`DUPLICATED_MAP_KEY`), as the
+    * reference panics on it. Null or empty `types`, and all-dangling types,
+    * fall back to `desc`.
     */
   def withInfo(entities: DataFrame, cfg: EntityIndexConfig): DataFrame = {
     if (cfg.ignoreTypes)
       return entities.withColumn("info", col("desc"))
     val typeIds = entities
       .select(explode(col("types")).as("tid")).distinct()
-    // dictionary rows for ids that are actually used as types — small, so
-    // broadcast it back onto the exploded fact side.
-    val typeInfo = entities
-      .join(typeIds, entities("qid") === typeIds("tid"))
-      .select(col("tid"), col("label").as("t_label"), col("count").as("t_count"))
-    val exploded = entities
-      .select(col("qid").as("e_qid"), posexplode(col("types")).as(Seq("t_pos", "tid")))
-      .join(broadcast(typeInfo), Seq("tid"), "left")
-      .withColumn("t_count", coalesce(col("t_count"), lit(0L)))
-    // last type = the non-null label with the lexicographic-max
-    // (t_count, t_pos) — exactly the last element of the r5
-    // sort_array(collect_list)+filter chain ((t_count, t_pos) is a total
-    // order within an entity: t_pos is the unique types-array position),
-    // but as ONE max_by aggregate: no per-entity list allocation, no
-    // per-row array sort (r6, guide §1.2 step 2). Dangling-only entities
-    // lose their rows to the null-label filter and resolve to NULL through
-    // the left join, as the empty-array try_element_at did.
-    val resolved = exploded
-      .filter(col("t_label").isNotNull)
-      .groupBy(col("e_qid"))
-      .agg(max_by(col("t_label"), struct(col("t_count"), col("t_pos")))
-        .as("last_type"))
+    val typeMap = entities
+      .join(broadcast(typeIds), col("qid") === col("tid"), "left_semi")
+      .agg(map_from_entries(collect_list(struct(col("qid"),
+        struct(col("count").as("t_count"), col("label").as("t_label")))))
+        .as("type_map"))
+    val resolved = filter(
+      transform(col("types"), (tid, pos) => {
+        val t = element_at(col("type_map"), tid)
+        struct(t("t_count").as("t_count"), pos.as("t_pos"), t("t_label").as("t_label"))
+      }),
+      t => t("t_label").isNotNull)
     entities
-      .join(resolved, entities("qid") === resolved("e_qid"), "left")
-      .withColumn("info", coalesce(col("last_type"), col("desc")))
-      .drop("e_qid", "last_type")
+      .crossJoin(broadcast(typeMap))
+      .withColumn("info", coalesce(array_max(resolved)("t_label"), col("desc")))
+      .drop("type_map")
   }
 
   /** A2+A4 (`kg-entities.rs:129-136,156`): aliases held by exactly one entity
     * occurrence. Occurrences are NOT deduped per entity — an alias listed
-    * twice by one entity is ambiguous in the reference too.
+    * twice by one entity is ambiguous in the reference too. The holder is
+    * carried as its `seq` (the unique input position, a surrogate for its
+    * qid): with only long buffers the aggregate plans as a HashAggregate,
+    * where a string `first` buffer forces a SortAggregate.
     */
   def uniqueAliases(entities: DataFrame): DataFrame =
     entities
-      .select(col("qid").as("a_qid"), col("count").as("a_count"),
+      .select(col("seq").as("a_seq"), col("count").as("a_count"),
         explode(col("aliases")).as("a_surface"))
       .groupBy(col("a_surface"))
       // only n ≤ 1 groups survive, so `first` IS the (single) holder —
-      // deterministic for every kept row, and a declarative aggregate the
-      // planner runs as a codegen'd HashAggregate (the round-4 max-of-
-      // struct forced a SortAggregate: two extra sorts on the alias key)
+      // deterministic for every kept row
       .agg(count(lit(1)).as("a_n"),
-        first(col("a_qid")).as("h_qid"), first(col("a_count")).as("h_count"))
+        first(col("a_seq")).as("h_seq"), first(col("a_count")).as("h_count"))
       .filter(col("a_n") <= 1)
-      .select(col("a_surface"), col("h_qid").as("a_qid"),
+      .select(col("a_surface"), col("h_seq").as("a_seq"),
         col("h_count").as("a_count"))
 
   /** J3 (`kg-entities.rs:158-175`): `check_for_more_popular_alias(label, ent)`
@@ -111,9 +115,9 @@ object EntityIndexBuilder {
     df.join(uniqAlias, df(surfaceCol) === uniqAlias("a_surface"), "left")
       .withColumn(
         "override",
-        col("a_qid").isNotNull && col("a_qid") =!= col("qid") &&
+        col("a_seq").isNotNull && col("a_seq") =!= col("seq") &&
           col("a_count") > col("count"))
-      .drop("a_surface", "a_qid", "a_count")
+      .drop("a_surface", "a_seq", "a_count")
   }
 
   /** Full cascade. Input: canonical entity schema
@@ -133,9 +137,9 @@ object EntityIndexBuilder {
 
   /** @param persistInput cache the input dump for the duration of the build.
     * Pays when the dump plan is expensive or read often: the non-ignoreTypes
-    * cascade reads it FIVE times (type-id distinct, type-info join, type
-    * explode, the main row set, the alias explode), and the pipeline's
-    * dictionary-weights join and nodes stage read it again, so
+    * cascade reads it FOUR times (type-id distinct, type-map semi-join, the
+    * main row set, the alias explode), and the pipeline's dictionary-weights
+    * join and nodes stage read it again, so
     * [[graft.pipeline.KgPipeline.run]] forces `true`. Under `ignoreTypes`
     * the dump is read exactly TWICE ([[withInfo]] degenerates to a pure
     * projection), and for a columnar source two column-pruned scans are
@@ -143,10 +147,27 @@ object EntityIndexBuilder {
     * (the persist-always r6 draft cost kg_entity_index ~15% at sf0.1) —
     * hence the default `!cfg.ignoreTypes`. The dump is KG-sized (~GB at
     * Wikidata scale — NOT the corpus), so caching it when it pays is the
-    * coarse-codebook-style contract; released with the other handles.
+    * coarse-codebook-style contract; released with the other handles. A
+    * dump the CALLER persisted is not among the handles when
+    * `persistInput` is false, so releasing them leaves the caller's cache.
     */
   def buildTracked(entities0: DataFrame, cfg: EntityIndexConfig,
       persistInput: Boolean): (DataFrame, Seq[DataFrame]) = {
+    val (index, caches) = buildWithCaches(entities0, cfg, persistInput)
+    (index, caches.all)
+  }
+
+  /** The cascade's persisted intermediates by name. `input` is the dump,
+    * present only when the build itself cached it.
+    */
+  final case class Caches(cand: DataFrame, e34: DataFrame, aliasCand: DataFrame,
+      plainWinners: DataFrame, input: Option[DataFrame]) {
+    def all: Seq[DataFrame] = Seq(cand, e34, aliasCand, plainWinners) ++ input
+  }
+
+  /** [[buildTracked]] with the handles as named [[Caches]]. */
+  def buildWithCaches(entities0: DataFrame, cfg: EntityIndexConfig,
+      persistInput: Boolean): (DataFrame, Caches) = {
     val entities = if (persistInput) entities0.persist() else entities0
     val withInf = withInfo(entities, cfg)
     val uniq = uniqueAliases(entities)
@@ -154,8 +175,8 @@ object EntityIndexBuilder {
     val wLabel = Window.partitionBy(col("label"))
     // desc/types are consumed by withInfo and never read again — dropping
     // them keeps the cache narrow; aliases stay because E5's candidate set
-    // derives from this cache (re-deriving it from `withInf` would run the
-    // type-resolution join a second time on the non-ignoreTypes path)
+    // derives from this cache (re-deriving it from `withInf` would resolve
+    // the types a second time on the non-ignoreTypes path)
     val cand = withOverride(
       withInf.withColumn("grp_n", count(lit(1)).over(wLabel)), uniq, "label", cfg)
       .drop("desc", "types")
@@ -286,6 +307,6 @@ object EntityIndexBuilder {
         col("qid").as("id"), lit(AliasInfo).as("kind"))
 
     (e1.union(e3Plain).union(e34Info).union(e5Plain).union(e5Info),
-      Seq(cand, e34, aliasCand, plainWinners, entities))
+      Caches(cand, e34, aliasCand, plainWinners, Option.when(persistInput)(entities)))
   }
 }

@@ -30,9 +30,10 @@ object ReferenceOracle {
 
     // J2: info = last type label after sorting types by type-entity count
     // (stable, ascending), unknown types dropped; else desc (lib.rs:63-72).
+    // A null types array (the Rust parser never yields one) reads as empty.
     def infoOf(r: RawEntity): String = {
       if (cfg.ignoreTypes) return r.desc
-      val sorted = r.types.zipWithIndex
+      val sorted = Option(r.types).getOrElse(Nil).zipWithIndex
         .sortBy { case (t, i) => (byQid.get(t).map(_.count).getOrElse(0L), i) }
         .flatMap { case (t, _) => byQid.get(t).map(_.label) }
       sorted.lastOption.getOrElse(r.desc)
