@@ -13,8 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   *
   * Motivation (guide §1.2 step 2 — per-task work, and §4: prefer codegen
   * expressions over interpreted lambda chains): the built-in higher-order
-  * formulations in [[graft.ops.Dedup]] evaluate `numHashes` (resp. `bits`)
-  * separate `transform`/`array_min`/`filter` lambda chains per document —
+  * formulations (kept in the test sources as the equivalence reference)
+  * evaluate `numHashes` (resp. `bits`) separate
+  * `transform`/`array_min`/`filter` lambda chains per document —
   * HOFs run OUTSIDE whole-stage codegen, allocate an intermediate array per
   * lambda, and re-hash every token `numHashes`/`bits` times. These
   * expressions tokenize-hash ONCE per document and fold all hash slots in a
@@ -24,8 +25,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   */
 
 /** All `numHashes` MinHash signature slots of a token array in one pass —
-  * semantically identical to
-  * `Dedup.minhashSigFromHashes(Dedup.tokenHashes(toks), numHashes)`:
+  * semantically identical to the built-in HOF composition SketchExpressionSpec
+  * tests it against:
   *
   *   sig_i = min over tokens t of (polyhash(t) * a_i + b_i) mod (2^31-1)
   *   a_i = ((i*1103515245 + 12345) mod (2^31-2)) + 1

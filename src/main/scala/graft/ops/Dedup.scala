@@ -27,8 +27,8 @@ object Dedup {
   private def tokens(textCol: Column): Column =
     filter(split(textCol, "\\s+"), t => length(t) > 0)
 
-  private val P: Long = 1000000007L
-  private val P31: Long = 2147483647L // 2^31 - 1
+  private[graft] val P: Long = 1000000007L
+  private[graft] val P31: Long = 2147483647L // 2^31 - 1
 
   /** Distinct (id, token) pairs with document-frequency cap — the inverted
     * index that keys every similarity self-join. Tokens above `maxDf` are
@@ -63,32 +63,12 @@ object Dedup {
         (col("sza") + col("szb") - col("inter")).as("uni"))
   }
 
-  /** Portable per-token hashes: polynomial char hash mod 1e9+7 (< 2^30), the
-    * same primitive as [[TextAnalysis.fingerprint]].
-    */
-  def tokenHashes(tokensCol: Column): Column =
-    transform(tokensCol, t => TextAnalysis.fingerprint(t))
-
-  /** MinHash signature from pre-hashed tokens: sig_i = min over token hashes
-    * of (a_i·h + b_i mod 2^31-1) with LARGE multipliers a_i (the affine step
-    * must wrap the modulus many times, otherwise every sig_i is minimized by
-    * the same smallest-hash token and the signature is degenerate).
-    * Max intermediate: h(<2^30) · a(<2^31) ≈ 2.3e18 < 2^63 — overflow-free in
-    * any engine with 64-bit integers.
-    */
-  def minhashSigFromHashes(hashesCol: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)), i => {
-      val a = pmod(i.cast("long") * 1103515245L + 12345L, lit(P31 - 1)) + 1L
-      val b = pmod(i.cast("long") * 134775813L + 1L, lit(P31))
-      array_min(transform(hashesCol, h => pmod(h * a + b, lit(P31))))
-    })
-
   /** MinHash signature of a token set — the native codegen'd
     * [[graft.functions.MinhashSigs]] (one fused pass: every token hashed
-    * once, all `numHashes` minima folded in a single loop). The built-in
-    * composition [[minhashSigBuiltin]] is the documented cross-engine
-    * semantics (what the DuckDB oracles mirror); equivalence is
-    * property-tested in SketchExpressionSpec.
+    * once, all `numHashes` minima folded in a single loop; its scaladoc
+    * states the formula). The built-in HOF composition in the test sources
+    * is the documented cross-engine semantics (what the DuckDB oracles
+    * mirror); equivalence is property-tested in SketchExpressionSpec.
     */
   def minhashSig(tokensCol: Column, numHashes: Int): Column =
     // null-array edge mirrors the built-in exactly: the HOF form's outer
@@ -97,10 +77,6 @@ object Dedup {
     when(tokensCol.isNull,
       array((0 until numHashes).map(_ => lit(null).cast("long")): _*))
       .otherwise(graft.functions.MinhashSigs.minhash_sigs(tokensCol, numHashes))
-
-  /** Built-in-only reference formulation of [[minhashSig]]. */
-  def minhashSigBuiltin(tokensCol: Column, numHashes: Int): Column =
-    minhashSigFromHashes(tokenHashes(tokensCol), numHashes)
 
   /** Polynomial band hash over a signature slice — portable stand-in for
     * hashing the band tuple.
@@ -268,7 +244,7 @@ object Dedup {
     (clusters, pairs, handles)
   }
 
-  private val SimhashBits = 48
+  private[graft] val SimhashBits = 48
 
   /** SimHash bit vector (standard construction with one derived hash per
     * bit): token hash h (portable polynomial), bit b votes 1 iff
@@ -279,8 +255,9 @@ object Dedup {
     *
     * Backed by the native codegen'd [[graft.functions.SimhashBitsExpr]]
     * (every token hashed once, all 48 parities folded in one fused loop);
-    * [[simhashBitsBuiltin]] is the documented cross-engine semantics,
-    * equivalence property-tested in SketchExpressionSpec.
+    * the built-in HOF composition in the test sources is the documented
+    * cross-engine semantics, equivalence property-tested in
+    * SketchExpressionSpec.
     */
   def simhashBits(tokensCol: Column): Column =
     // null-array edge mirrors the built-in exactly: the HOF form's outer
@@ -289,19 +266,6 @@ object Dedup {
     when(tokensCol.isNull,
       array((0 until SimhashBits).map(_ => lit(0)): _*))
       .otherwise(graft.functions.SimhashBitsExpr.simhash_bits(tokensCol, SimhashBits))
-
-  /** Built-in-only reference formulation of [[simhashBits]]. */
-  def simhashBitsBuiltin(tokensCol: Column): Column = {
-    val nToks = size(tokensCol)
-    val hs = tokenHashes(tokensCol)
-    transform(
-      sequence(lit(0), lit(SimhashBits - 1)),
-      b => when(
-        size(filter(hs,
-          h => pmod(pmod(h * (b.cast("long") * 131L + 137L) + b.cast("long") * 1000003L + 7L,
-            lit(P)), lit(2L)) === 1L)) * 2
-          > nToks, 1).otherwise(0))
-  }
 
   /** The bit vector packed into one long (for compact storage/eyeballing). */
   def simhash(tokensCol: Column): Column =
@@ -374,18 +338,11 @@ object Dedup {
     * Dropped-bucket volume is measured ([[countOverfullBuckets]]) and logged
     * so capped runs are observable, never silent. Both caps are exact SQL
     * (GROUP BY … HAVING), so capped outputs stay oracle-checkable.
-    */
-  def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 32, bands: Int = 8, thresholdPct: Int = 60,
-      maxBucket: Long = 1000L, maxDfFraction: Double = 0.01,
-      corpusRowsHint: Option[Long] = None): DataFrame =
-    minhashNearDupsTracked(df, idCol, textCol, numHashes, bands, thresholdPct,
-      maxBucket, maxDfFraction, corpusRowsHint)._1
-
-  /** [[minhashNearDups]] plus the persisted handles to release once the
-    * result is materialized (the `detectTracked` pattern — VERDICT r03 #1):
-    * the tokenize → sign → band plan — the dominant cost at corpus scale —
-    * is persisted and evaluated EXACTLY ONCE, by the drop-volume measurement
+    *
+    * Returns the pairs and the persisted handles to release once the result
+    * is materialized (the `detectTracked` pattern — VERDICT r03 #1): the
+    * tokenize → sign → band plan — the dominant cost at corpus scale — is
+    * persisted and evaluated EXACTLY ONCE, by the drop-volume measurement
     * action; the cap semi-join and the candidate/verify joins then read the
     * cache (every leaf of the returned plan is an InMemoryRelation —
     * plan-asserted in OpsSpec). The round-3 shape re-evaluated it ~3×:
@@ -416,22 +373,16 @@ object Dedup {
       .collect()(0)
     val (nb, nr) = (over.getLong(0), over.getLong(1))
     if (nb > 0)
-      log.info(s"minhashNearDups: dropping $nb overfull band buckets " +
+      log.info(s"minhashNearDupsTracked: dropping $nb overfull band buckets " +
         s"($nr rows) at maxBucket=$maxBucket, maxDf=$maxDf, corpus=$corpus")
     (minhashPairsFrom(toks, banded, thresholdPct, maxBucket, Some(counts)),
       Seq(toks, banded, counts))
   }
 
   /** Capped-by-default SimHash near-dup entry point — see
-    * [[minhashNearDups]] for the cap rationale. Single-evaluation like the
-    * minhash twin; prefer [[simhashNearDupsTracked]] to release the cache.
-    */
-  def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, chunks: Int = 4, maxBucket: Long = 1000L): DataFrame =
-    simhashNearDupsTracked(df, idCol, textCol, maxHamming, chunks, maxBucket)._1
-
-  /** [[simhashNearDups]] plus the persisted handle to release once the
-    * result is materialized (see [[minhashNearDupsTracked]]).
+    * [[minhashNearDupsTracked]] for the cap rationale. Single-evaluation
+    * like the minhash twin: returns the pairs and the persisted handles to
+    * release once the result is materialized.
     */
   def simhashNearDupsTracked(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, chunks: Int = 4,
@@ -446,7 +397,7 @@ object Dedup {
       .collect()(0)
     val (nb, nr) = (over.getLong(0), over.getLong(1))
     if (nb > 0)
-      log.info(s"simhashNearDups: dropping $nb overfull chunk buckets " +
+      log.info(s"simhashNearDupsTracked: dropping $nb overfull chunk buckets " +
         s"($nr rows) at maxBucket=$maxBucket")
     (simhashPairsFrom(banded, maxHamming, maxBucket, Some(counts)),
       Seq(banded, counts))

@@ -25,14 +25,9 @@ object Similarity {
 
   /** dot(a, b): the custom codegen'd Catalyst expression (single fused loop,
     * no intermediate array — see graft.functions.FloatVecDot). The pure
-    * built-in formulation is kept for equivalence testing.
+    * built-in formulation lives in the test sources for equivalence testing.
     */
   def dot(a: Column, b: Column): Column = graft.functions.VecFunctions.vec_dot(a, b)
-
-  /** Built-in-only reference formulation of [[dot]]. */
-  def dotBuiltin(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -52,18 +47,13 @@ object Similarity {
 
   /** Exact integer dot product of two quantized vectors — the native
     * codegen'd [[graft.functions.LongVecDot]] (one fused loop inside
-    * whole-stage codegen; the HOF formulation below runs interpreted and
-    * was the dominant cost of the pair-verify phases).
+    * whole-stage codegen; the built-in HOF formulation, which the DuckDB
+    * oracles mirror term for term, runs interpreted and was the dominant
+    * cost of the pair-verify phases). Equivalence is property-tested in
+    * VecExpressionSpec.
     */
   def qdot(a: Column, b: Column): Column =
     graft.functions.VecFunctions.long_vec_dot(a, b)
-
-  /** Built-in-only reference formulation of [[qdot]] — what the DuckDB
-    * oracles mirror term for term; equivalence is property-tested in
-    * VecExpressionSpec.
-    */
-  def qdotBuiltin(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
   /** Deterministic cosine ranking key: dot/sqrt(na2·nb2) with the
     * multiplication done in double. Exact while na2·nb2 < 2^53; beyond that

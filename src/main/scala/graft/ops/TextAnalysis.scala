@@ -71,22 +71,14 @@ object TextAnalysis {
         .as("bpe_tokens"))
 
   /** Polynomial rolling-hash fingerprint over characters, mod 1e9+7 —
-    * deterministic across engines (integer-only). Backed by the native
+    * deterministic across engines (integer-only):
+    * h = fold(0, c => (h·31 + ascii(c)) mod 1e9+7). Backed by the native
     * codegen'd [[graft.functions.PolyHash]] expression (one fused loop); the
-    * built-in formulation below is kept for equivalence testing and as the
-    * documentation of the exact cross-engine semantics.
+    * built-in formulation the DuckDB oracles mirror lives in the test
+    * sources, equivalence-tested in PolyHashSpec.
     */
   def fingerprint(textCol: Column): Column =
     graft.functions.PolyHash.poly_hash(textCol)
-
-  /** Built-in-only reference formulation of [[fingerprint]] — what the
-    * DuckDB oracles mirror term for term.
-    */
-  def fingerprintBuiltin(textCol: Column): Column =
-    aggregate(
-      filter(split(textCol, ""), c => length(c) > 0),
-      lit(0L),
-      (acc, c) => pmod(acc * 31 + ascii(c), lit(1000000007L)))
 
   def fingerprints(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol), fingerprint(col(textCol)).as("fp"))

@@ -79,11 +79,10 @@ object KgPipeline {
 
   /** Bucket/sort spec of the bucketed mentions stage (`mentionBuckets > 0`):
     * conversation-keyed, so the triples walk and the co-reference groupBy
-    * read it exchange-free.
+    * read it exchange-free; sorted in the walk's order.
     */
   val MentionBucketCols: Seq[String] = Seq("conv_id")
-  val MentionSortCols: Seq[String] =
-    Seq("conv_id", "turn_idx", "span_start", "span_end", "id")
+  val MentionSortCols: Seq[String] = "conv_id" +: Triples.WalkOrder
 
   /** Rendered entity+property dictionary for the linker, with popularity
     * weights carried from the dumps.
@@ -163,7 +162,7 @@ object KgPipeline {
     *                      None → executor-local checkpoints
     * @param dictBroadcastMaxRows dictionary rows above which mention detection
     *                             switches from the broadcast trie scan to the
-    *                             shuffle join (see [[Mentions.detectAuto]])
+    *                             shuffle join (see [[Mentions.detectAutoTracked]])
     * @param mentionBuckets conv-bucketed mentions stage: negative (default)
     *                       = AUTO (defaultParallelism buckets — the
     *                       production shape); 0 opts out (unbucketed);
@@ -219,8 +218,8 @@ object KgPipeline {
     }
     val dict = dictionary(entityIndex, entities, propertyIndex, properties)
     // safe UPPER bound on dictionary rows from the committed stage manifests
-    // (renderSurfaces only dedups) — saves detectAuto a counting job over the
-    // dictionary plan (VERDICT r02 #5 / ADVICE r02)
+    // (renderSurfaces only dedups) — saves detectAutoTracked a counting job
+    // over the dictionary plan (VERDICT r02 #5 / ADVICE r02)
     val dictRowsHint = for {
       e <- store.rowCountOf("entity_index")
       p <- store.rowCountOf("property_index")
@@ -324,12 +323,10 @@ object KgPipeline {
       SaltedAgg.linkScores(mentions, saltN, maxIdDegree)
     }
     val triples = timed("triples", Seq("mentions"), Nil) {
-      // relational-grouping walk on BOTH paths (r5): over the bucketed
-      // mentions table it plans with zero Exchange (the write already
-      // co-located conversations), and on unbucketed input its UnsafeRow
-      // exchange measured ~25% faster than the typed groupByKey shape
-      // (24.1→19.5 s at 2 threads, 7.3→5.2 at 8, on 30M mentions)
-      Triples.extractBucketed(mentions)
+      // over the bucketed mentions table the walk plans with zero Exchange
+      // (the write already co-located conversations); on unbucketed input
+      // it pays one conv_id exchange
+      Triples.extract(mentions)
     }
     val canon = timed("canonical_map", Seq("mentions"), Nil) {
       Canonicalize.connectedComponents(

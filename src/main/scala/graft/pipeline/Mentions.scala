@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   *    shuffle, zero string concatenation in the hot loop. The pipeline's
   *    default for broadcast-sized dictionaries.
   *
-  * [[detectAuto]] picks between the trie scan and the shuffle join by the
-  * dictionary's size — an unconditional broadcast/driver-collect of a 10^8-row
-  * dictionary would be a multi-GB driver build (VERDICT r01 #4).
+  * [[detectAutoTracked]] picks between the trie scan and the shuffle join by
+  * the dictionary's size — an unconditional broadcast/driver-collect of a
+  * 10^8-row dictionary would be a multi-GB driver build (VERDICT r01 #4).
   *
   * Dominance rule (deterministic, set-algebraic — unlike sequential maximal
   * munch it needs no recursion, so the same rule is expressible in the DuckDB
@@ -215,7 +215,7 @@ object Mentions {
     * concatenation; trie descent replaces the round-1 prefix-set probe).
     *
     * The dictionary is collected to the driver and broadcast — use
-    * [[detectAuto]] when the dictionary may exceed broadcast scale.
+    * [[detectAutoTracked]] when the dictionary may exceed broadcast scale.
     */
   /** Compact the dictionary to flat arrays and broadcast it — the shared
     * front end of [[detectFast]] and [[detectFastTs]].
@@ -355,17 +355,11 @@ object Mentions {
   /** Size-guarded detection: trie scan while the dictionary fits broadcast
     * (row-count proxy; ~100 bytes/entry ⇒ the 20M default is a ~2 GB
     * broadcast), shuffle join beyond it. Both paths produce identical rows.
-    *
-    * Prefer [[detectAutoTracked]] with a `knownDictRows` hint: the pipeline
-    * already knows the index stage row counts from their manifests, so the
-    * path decision costs no extra job (VERDICT r02 #3 / ADVICE r02).
-    */
-  def detectAuto(turns: DataFrame, dictionary: DataFrame, maxN: Int = 4,
-      broadcastMaxRows: Long = 20000000L): DataFrame =
-    detectAutoTracked(turns, dictionary, maxN, broadcastMaxRows)._1
-
-  /** [[detectAuto]] plus the persisted handles to release after the result
-    * is materialized.
+    * Returns the persisted handles to release after the result is
+    * materialized. Pass a `knownDictRows` hint where one exists: the
+    * pipeline already knows the index stage row counts from their
+    * manifests, so the path decision costs no extra job (VERDICT r02 #3 /
+    * ADVICE r02).
     *
     * @param knownDictRows caller-known dictionary row count (or a safe UPPER
     *                      bound, e.g. the sum of the committed index stage

@@ -1,72 +1,44 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Per-turn (subj, pred, obj) triple extraction over linked mentions
-  * (SURVEY.md §2.9): conversations are windowed by conv_id ordered by
-  * (turn_idx, span_start) — the stable turn ordering the north rule fixes —
-  * and for every property mention,
+  * (SURVEY.md §2.9): each conversation is walked once in [[WalkOrder]] — the
+  * stable turn ordering the north rule fixes — carrying its focus entity
+  * across turns, and for every property mention,
   *
   *   subj = nearest entity mention BEFORE it (same turn or any earlier turn —
   *          the conversation-focus fallback),
   *   obj  = nearest entity mention AFTER it within the SAME turn.
   *
-  * Both are ignore-null window lookups, so the stage is two window passes over
-  * one partition-by-conversation sort — no joins, no shuffle beyond the
-  * conv_id hash partition.
+  * The walk groups on the conv_id column, so its one required distribution
+  * is `ClusteredDistribution(conv_id)`: one hash exchange over unbucketed
+  * mentions, none over a conv-bucketed mentions table.
   */
 object Triples {
 
-  /** @param mentions (conv_id, turn_idx, span_start, span_end, id, is_prop, score)
-    * @return (subj, pred, obj, conv_id, turn_idx, score)
+  /** The walk order within a conversation. The bucketed mentions stage sorts
+    * by `conv_id +: WalkOrder`; [[walkOrdering]] is the same order on rows.
     */
-  def extract(mentions: DataFrame): DataFrame = {
-    // both lookups use GROWING frames (unboundedPreceding → -1), which Spark
-    // evaluates incrementally in O(n) per partition; the "nearest entity
-    // after" is the same growing frame over the REVERSED sort order — a
-    // shrinking (1 → unboundedFollowing) frame would re-scan per row.
-    val wAsc = Window.partitionBy(col("conv_id"))
-      .orderBy(col("turn_idx").asc, col("span_start").asc, col("span_end").asc,
-        col("id").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wDesc = Window.partitionBy(col("conv_id"))
-      .orderBy(col("turn_idx").desc, col("span_start").desc, col("span_end").desc,
-        col("id").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val entId = when(!col("is_prop"), col("id"))
-    val entScore = when(!col("is_prop"), col("score"))
-    val withCtx = mentions
-      .withColumn("subj", last(entId, ignoreNulls = true).over(wAsc))
-      .withColumn("subj_score", last(entScore, ignoreNulls = true).over(wAsc))
-      // nearest entity after, then constrain to same turn
-      .withColumn("obj_cand",
-        last(when(!col("is_prop"), struct(col("turn_idx").as("t"), col("id").as("i"),
-          col("score").as("s"))), ignoreNulls = true)
-          .over(wDesc))
-    withCtx
-      .filter(col("is_prop") && col("subj").isNotNull &&
-        col("obj_cand").isNotNull && col("obj_cand.t") === col("turn_idx"))
-      .select(
-        col("subj"),
-        col("id").as("pred"),
-        col("obj_cand.i").as("obj"),
-        col("conv_id"),
-        col("turn_idx"),
-        ((col("subj_score") + col("obj_cand.s")) / 2.0 + col("score")).as("score"))
-  }
+  val WalkOrder: Seq[String] = Seq("turn_idx", "span_start", "span_end", "id")
 
   /** A mention row in the walker's wire shape:
     * (conv_id, turn_idx, span_start, span_end, id, is_prop, score).
     */
   type MentionRow = (String, Int, Int, Int, String, Boolean, Double)
 
-  /** One conversation's turn walk — the per-group state machine both
-    * [[extractFast]] (batch) and the streaming stateful extractor share.
-    * `seed` is the conversation-focus entity carried in from EARLIER turns
-    * (an earlier micro-batch on the streaming path; None in batch, where the
-    * group holds the whole conversation).
+  /** [[WalkOrder]] on [[MentionRow]]s: the batch walk and the streaming
+    * reorder buffer both sort by it.
+    */
+  private[graft] val walkOrdering: Ordering[MentionRow] =
+    Ordering.by((m: MentionRow) => (m._2, m._3, m._4, m._5))
+
+  /** One conversation's turn walk — the per-group state machine [[extract]]
+    * (batch) and `IncrementalKg.statefulTriplesStream` share. `ms` is in
+    * [[walkOrdering]]. `seed` is the conversation-focus entity carried in
+    * from EARLIER turns (an earlier micro-batch on the streaming path; None
+    * in batch, where the group holds the whole conversation).
     *
     * @return (triples, final focus entity or null, its score)
     */
@@ -106,44 +78,14 @@ object Triples {
     (out.toSeq, lastEnt, lastScore)
   }
 
-  /** Sort key shared by the batch group walk and the streaming state walk —
-    * the same stable (turn, span, id) order the window formulation fixes.
+  /** @param mentions (conv_id, turn_idx, span_start, span_end, id, is_prop, score)
+    *                 — any input; over a conv-bucketed table
+    *                 ([[graft.io.ManifestStore.runStageBucketed]]) the walk's
+    *                 distribution is satisfied by the scan and the stage
+    *                 plans with ZERO Exchange (plan-asserted in PlanSpec)
+    * @return (subj, pred, obj, conv_id, turn_idx, score)
     */
-  private[graft] def sortMentions(ms: Array[MentionRow]): Array[MentionRow] =
-    ms.sortBy(m => (m._2, m._3, m._4, m._5))
-
-  /** Single-pass variant of [[extract]] — identical semantics
-    * (equivalence-tested), one shuffle + one sort instead of two opposite-
-    * order window sorts: conversations group on one key, each group is a
-    * bounded turn sequence walked once. The per-group state (conversation
-    * focus entity) is exactly what the two growing window frames encode.
-    */
-  def extractFast(mentions: DataFrame): DataFrame = {
-    val spark = mentions.sparkSession
-    import spark.implicits._
-    mentions
-      .select(col("conv_id"), col("turn_idx").cast("int"),
-        col("span_start").cast("int"), col("span_end").cast("int"),
-        col("id"), col("is_prop"), col("score").cast("double"))
-      .as[MentionRow]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        walkTurns(conv, sortMentions(it.toArray), None)._1.iterator
-      }
-      .toDF("subj", "pred", "obj", "conv_id", "turn_idx", "score")
-  }
-
-  /** [[extractFast]] in RELATIONAL grouping form — identical semantics
-    * (equivalence-tested), but the group key is the `conv_id` COLUMN rather
-    * than a typed lambda, so the walk's required distribution is
-    * `ClusteredDistribution(conv_id)` and Catalyst can satisfy it from the
-    * scan: over a conv-bucketed mentions table
-    * ([[graft.io.ManifestStore.runStageBucketed]]) the whole stage plans
-    * with ZERO Exchange (plan-asserted in PlanSpec) — the write-side bucket
-    * repartition already co-located every conversation. On unbucketed input
-    * it degrades gracefully to the same one-shuffle shape as extractFast.
-    */
-  def extractBucketed(mentions: DataFrame): DataFrame = {
+  def extract(mentions: DataFrame): DataFrame = {
     val spark = mentions.sparkSession
     import spark.implicits._
     mentions
@@ -153,7 +95,7 @@ object Triples {
       .as[MentionRow]
       .groupBy(col("conv_id")).as[String, MentionRow]
       .flatMapGroups { (conv: String, it: Iterator[MentionRow]) =>
-        walkTurns(conv, sortMentions(it.toArray), None)._1.iterator
+        walkTurns(conv, it.toArray.sorted(walkOrdering), None)._1.iterator
       }
       .toDF("subj", "pred", "obj", "conv_id", "turn_idx", "score")
   }

@@ -124,11 +124,8 @@ object KgQueries {
       col("l_quantity").cast("long").cast("double").as("score"))
 
   def kgTriples(s: SparkSession, d: String): DataFrame =
-    // r6: the relational-grouping walk (the pipeline's production shape)
-    // replaces the two-opposite-order-window formulation — one exchange +
-    // one sort + a single streaming pass per conversation instead of one
-    // exchange + two full sorts + two window passes. Identical row set
-    // (equivalence-tested in MentionTripleSpec; oracle unchanged).
-    Triples.extractBucketed(mentionRowsFromLineitem(s, d))
+    // the pipeline's turn walk: one exchange + one sort + a single pass
+    // per conversation
+    Triples.extract(mentionRowsFromLineitem(s, d))
       .select("subj", "pred", "obj", "conv_id", "turn_idx")
 }

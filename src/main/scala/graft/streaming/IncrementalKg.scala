@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
+import graft.pipeline.Triples
+
 /** The cross-batch conversation state: the focus entity the batch walker
   * carries between turns, persisted in the state store between micro-batches.
   */
@@ -26,54 +28,15 @@ final case class ConvBuffer(pending: Seq[PendingMention], lastEnt: String,
   *
   * The reference is pure batch (SURVEY.md §2.7) and so is the north rule;
   * this is the optional incremental-ingest extension: new transcript turns
-  * arrive on a stream, mention detection + triple extraction run per
-  * micro-batch against the (periodically rebuilt, broadcast) dictionaries,
-  * and triples append to the KG tables. Canonicalization/link-score
-  * re-aggregation stay batch jobs over the appended output — the classic
-  * lambda split for fixpoint operators that streaming cannot express.
-  *
-  * Delivery: EFFECTIVELY-ONCE per micro-batch. Each batch writes to a
-  * deterministic `batch=<batchId>` partition directory with overwrite — a
-  * replayed/restarted micro-batch rewrites its own directory instead of
-  * appending duplicates (foreachBatch alone is at-least-once; batch-keyed
-  * idempotent writes are the standard upgrade). Within a batch,
-  * dropDuplicates removes same-batch repeats; readers see the union of batch
-  * directories (`spark.read.parquet(outPath)` — the batch key surfaces as a
-  * partition column).
+  * arrive on a stream, mention detection runs per micro-batch against the
+  * (periodically rebuilt, broadcast) dictionaries, the batch turn walk runs
+  * across micro-batches out of a per-conversation state store
+  * ([[IncrementalKg.statefulTriplesStream]]), and triples append to the KG
+  * tables. Canonicalization/link-score re-aggregation stay batch jobs over
+  * the appended output — the classic lambda split for fixpoint operators
+  * that streaming cannot express.
   */
 object IncrementalKg {
-
-  /** Wire a streaming transcripts source to an append sink of triples.
-    * `transcripts` must be a streaming DataFrame with the input_hint schema.
-    * `dictionary` is a BATCH dictionary (surface, id, kind, is_prop, weight).
-    */
-  def triplesStream(
-      transcripts: DataFrame,
-      dictionary: DataFrame,
-      outPath: String,
-      queryName: String,
-      checkpointDir: String): StreamingQuery = {
-    val withWm = transcripts.withWatermark("ts", "10 minutes")
-    // per-batch: the same batch operators as the pipeline — mention scan is
-    // stateless per turn, triple extraction windows stay WITHIN a batch
-    // (conversations are assumed batch-aligned by the ingest partitioner;
-    // for conversations that SPLIT across batches use
-    // [[statefulTriplesStream]], which carries the focus entity in a
-    // flatMapGroupsWithState state store).
-    withWm.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val mentions = graft.pipeline.Mentions.detectFast(batch.toDF(), dictionary)
-        graft.pipeline.Triples.extract(mentions)
-          .dropDuplicates("conv_id", "turn_idx", "subj", "pred", "obj")
-          // idempotent: replays of batch N overwrite batch N's own directory
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        ()
-      }
-      .start()
-  }
 
   /** Split the sorted reorder buffer at the first turn the watermark has NOT
     * passed: only WHOLE turns flush (all mentions of a turn share its event
@@ -144,7 +107,7 @@ object IncrementalKg {
     * split across micro-batches AND turns may arrive out of turn order
     * across batches. Mentions buffer in a per-conversation
     * `flatMapGroupsWithState` state store keyed by conv_id; turns are walked
-    * (in turn_idx order, with the carried focus entity as seed) only once
+    * (in [[Triples.WalkOrder]], with the carried focus entity as seed) only once
     * the event-time watermark passes their timestamp — so a turn arriving a
     * batch late is sorted back into place before anything after it is
     * walked. An event-time timeout flushes the tail when the watermark
@@ -223,16 +186,16 @@ object IncrementalKg {
             state.remove()
             Iterator.empty
           } else {
-            val pending = (prior.pending ++ incoming)
-              .sortBy(m => (m.turnIdx, m.spanStart, m.spanEnd, m.id))
+            def row(m: PendingMention): Triples.MentionRow =
+              (conv, m.turnIdx, m.spanStart, m.spanEnd, m.id, m.isProp, m.score)
+            val pending = (prior.pending ++ incoming).sortBy(row)(Triples.walkOrdering)
             val wm = state.getCurrentWatermarkMs()
             val (ripe, rest) = splitRipe(pending, wm)
-            val ms: Array[graft.pipeline.Triples.MentionRow] = ripe.map(m =>
-              (conv, m.turnIdx, m.spanStart, m.spanEnd, m.id, m.isProp, m.score)).toArray
+            val ms = ripe.map(row).toArray
             val seed =
               if (prior.lastEnt != null) Some((prior.lastEnt, prior.lastScore)) else None
             val (out, lastEnt, lastScore) =
-              graft.pipeline.Triples.walkTurns(conv, ms, seed)
+              Triples.walkTurns(conv, ms, seed)
             state.update(ConvBuffer(rest, lastEnt, lastScore))
             if (rest.nonEmpty)
               // wake this group when the watermark passes its buffered tail
@@ -255,23 +218,5 @@ object IncrementalKg {
       .option("path", outPath)
       .outputMode("append")
       .start()
-  }
-
-  /** Stateful streaming mention counts with watermarked event-time windows —
-    * the windowed-aggregation shape (readStream → watermark → window → agg)
-    * for monitoring link-score drift on the stream.
-    */
-  def mentionRates(transcripts: DataFrame, dictionary: DataFrame): DataFrame = {
-    val withWm = transcripts.withWatermark("ts", "10 minutes")
-    // stateless scan then windowed count by entity id
-    val exploded = withWm
-      .select(col("conv_id"), col("turn_idx"), col("text"), col("ts"))
-      .withColumn("tok", explode(split(col("text"), "\\s+")))
-    exploded
-      .join(broadcast(dictionary.filter(!col("is_prop"))
-        .filter(!col("surface").contains(" "))
-        .select(col("surface").as("tok"), col("id"))), Seq("tok"))
-      .groupBy(window(col("ts"), "5 minutes"), col("id"))
-      .agg(count(lit(1)).as("n_mentions"))
   }
 }

@@ -1,7 +1,10 @@
 package graft
 
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.oracle.TriplesOracle
 import graft.pipeline.{Mentions, SaltedAgg, Triples}
 
 class MentionTripleSpec extends AnyFunSuite {
@@ -62,7 +65,7 @@ class MentionTripleSpec extends AnyFunSuite {
       ("Q1490", "P47", "Q1490", "c1", 2)))
   }
 
-  test("extractFast (single pass) == extract (windows) on synth mentions") {
+  test("turn walk == windowed oracle on synth mentions") {
     val ents = graft.synth.Synth.entityDump(spark, 200)
     val props = graft.synth.Synth.propertyDump(spark, 20)
     val dict = graft.pipeline.KgPipeline.dictionary(
@@ -74,9 +77,83 @@ class MentionTripleSpec extends AnyFunSuite {
       .selectExpr("subj", "pred", "obj", "conv_id", "turn_idx", "round(score, 6) AS s")
       .collect().map(_.toString).sorted.toSeq
     val a = c(Triples.extract(mentions))
-    val b = c(Triples.extractFast(mentions))
+    val b = c(TriplesOracle.windowed(mentions))
     assert(a == b)
     assert(a.nonEmpty)
+  }
+
+  /** Generated linked mentions, unique on (conv_id, turn_idx, span_start,
+    * span_end, id) as detection produces: entity-only, property-only and
+    * mixed turns at gapped turn indices, spans drawn from a narrow range so
+    * several mentions share a span_start.
+    */
+  val genMentions: Gen[Seq[Triples.MentionRow]] = {
+    val genTurn = for {
+      kind <- Gen.oneOf("ent", "prop", "mixed", "mixed")
+      n <- Gen.choose(1, 5)
+      ms <- Gen.listOfN(n, for {
+        start <- Gen.choose(0, 3)
+        len <- Gen.choose(1, 3)
+        isProp <- kind match {
+          case "ent" => Gen.const(false)
+          case "prop" => Gen.const(true)
+          case _ => Gen.oneOf(true, false)
+        }
+        k <- Gen.choose(0, 3)
+        score <- Gen.oneOf(0.5, 1.0, 2.0, 3.5)
+      } yield (start, start + len, if (isProp) s"P$k" else s"Q$k", isProp, score))
+    } yield ms.distinctBy(m => (m._1, m._2, m._3))
+    val genConv = for {
+      nTurns <- Gen.choose(1, 5)
+      turns <- Gen.pick(nTurns, 0 to 7)
+      ms <- Gen.listOfN(nTurns, genTurn)
+    } yield turns.sorted.zip(ms)
+    for {
+      nConvs <- Gen.choose(1, 5)
+      convs <- Gen.listOfN(nConvs, genConv)
+    } yield convs.zipWithIndex.flatMap { case (turns, c) =>
+      turns.flatMap { case (t, ms) =>
+        ms.map { case (s, e, id, isProp, score) => (s"c$c", t, s, e, id, isProp, score) }
+      }
+    }
+  }
+
+  /** Hand-checked conversation planted in every generated sample. */
+  val planted: Seq[Triples.MentionRow] = Seq(
+    // a property is the conversation's first mention: no subject yet
+    ("planted", 0, 0, 1, "P1", true, 1.0),
+    ("planted", 0, 1, 2, "Q1", false, 1.0),
+    // P2's only object candidate (Q3) is in a LATER turn: must not bind
+    ("planted", 1, 0, 1, "Q2", false, 2.0),
+    ("planted", 1, 1, 2, "P2", true, 1.0),
+    ("planted", 2, 0, 1, "Q3", false, 1.0), // entity-only turn
+    // four mentions share span_start 0: walk order is (span_end, id)
+    ("planted", 3, 0, 1, "P3", true, 0.5),
+    ("planted", 3, 0, 2, "Q4", false, 1.0),
+    ("planted", 3, 0, 2, "Q5", false, 1.5),
+    ("planted", 3, 0, 3, "P4", true, 1.0),
+    ("planted", 4, 2, 3, "P1", true, 1.0)) // property-only turn
+
+  test("turn walk == windowed oracle on generated mentions, unbucketed and bucketed") {
+    import spark.implicits._
+    def c(df: org.apache.spark.sql.DataFrame) = df
+      .selectExpr("subj", "pred", "obj", "conv_id", "turn_idx", "round(score, 6) AS s")
+      .collect().map(_.toString).sorted.toSeq
+    val store = new graft.io.ManifestStore(spark,
+      java.nio.file.Files.createTempDirectory("walk-prop").toString)
+    for (seed <- 1L to 8L) {
+      val rows = genMentions(Gen.Parameters.default, Seed(seed)).get ++ planted
+      val mentions = rows.toDF("conv_id", "turn_idx", "span_start", "span_end",
+        "id", "is_prop", "score")
+      val want = c(TriplesOracle.windowed(mentions))
+      assert(want.filter(_.contains(",planted,")) == Seq("[Q3,P3,Q4,planted,3,1.5]"),
+        s"seed $seed: planted conversation: $want")
+      assert(c(Triples.extract(mentions)) == want, s"seed $seed: unbucketed walk")
+      val (bucketed, _) = store.runStageBucketed("mentions", s"seed-$seed",
+        graft.pipeline.KgPipeline.MentionBucketCols,
+        graft.pipeline.KgPipeline.MentionSortCols, nBuckets = 3)(mentions)
+      assert(c(Triples.extract(bucketed)) == want, s"seed $seed: bucketed walk")
+    }
   }
 
   test("salted aggregation == plain aggregation (skewed keys)") {
@@ -151,17 +228,30 @@ class MentionTripleSpec extends AnyFunSuite {
   test("dictionary-size guard: shuffle-join path == broadcast trie path") {
     val ents = graft.synth.Synth.entityDump(spark, 250)
     val props = graft.synth.Synth.propertyDump(spark, 25)
-    val dict = graft.pipeline.KgPipeline.dictionary(
-      graft.index.EntityIndexBuilder.build(ents), ents,
+    val (ei, eiCaches) = graft.index.EntityIndexBuilder.buildTracked(ents)
+    val dict = graft.pipeline.KgPipeline.dictionary(ei, ents,
       graft.index.PropertyIndexBuilder.build(props), props)
+    dict.count() // fill the entity index's own caches before the snapshot
     val turns = graft.synth.Synth.transcripts(spark, 25, 5, 250, 25)
-    def collectM(df: org.apache.spark.sql.DataFrame) =
-      df.select("conv_id", "turn_idx", "span_start", "span_end", "surface", "id",
-        "kind", "is_prop", "score")
+    def cached() = spark.sparkContext.getPersistentRDDs.keySet
+    // force the guard BOTH ways: threshold 0 → shuffle join, huge → trie
+    // scan; each path's handles released, no cached block may remain
+    def run(broadcastMaxRows: Long) = {
+      val before = cached()
+      val (df, caches) = Mentions.detectAutoTracked(turns, dict,
+        broadcastMaxRows = broadcastMaxRows)
+      val rows = df.select("conv_id", "turn_idx", "span_start", "span_end",
+        "surface", "id", "kind", "is_prop", "score")
         .collect().map(_.toString).toSet
-    // force the guard BOTH ways: threshold 0 → shuffle join, huge → trie scan
-    val viaShuffle = collectM(Mentions.detectAuto(turns, dict, broadcastMaxRows = 0L))
-    val viaTrie = collectM(Mentions.detectAuto(turns, dict, broadcastMaxRows = Long.MaxValue))
+      caches.foreach(_.unpersist(blocking = true))
+      val leaked = cached() -- before
+      assert(leaked.isEmpty,
+        s"broadcastMaxRows=$broadcastMaxRows left cached RDDs: $leaked")
+      rows
+    }
+    val viaShuffle = run(0L)
+    val viaTrie = run(Long.MaxValue)
+    eiCaches.foreach(_.unpersist(blocking = true))
     assert(viaShuffle == viaTrie,
       s"only-shuffle=${(viaShuffle -- viaTrie).take(5)} only-trie=${(viaTrie -- viaShuffle).take(5)}")
     assert(viaTrie.nonEmpty)
@@ -248,7 +338,7 @@ class MentionTripleSpec extends AnyFunSuite {
       graft.index.EntityIndexBuilder.build(rich), rich,
       graft.index.PropertyIndexBuilder.build(props), props)
     val turns = graft.synth.Synth.transcripts(spark, 30, 6, n, 20, richLabels = true)
-    val triples = Triples.extractFast(Mentions.detectFast(turns, dict))
+    val triples = Triples.extract(Mentions.detectFast(turns, dict))
     assert(triples.count() > 0)
   }
 }

@@ -198,10 +198,10 @@ class OpsSpec extends AnyFunSuite {
     assert(nb > 0 && nr > 0)
   }
 
-  test("capped-default wrappers drop a planted hot bucket, keep honest pairs") {
+  test("capped-default tracked entry points drop a planted hot bucket, keep honest pairs") {
     import spark.implicits._
     // 1100 byte-identical docs: every band bucket holds all 1100 rows —
-    // past the default maxBucket=1000, so the wrappers must drop them all.
+    // past the default maxBucket=1000, so the entry points must drop them all.
     // maxDfFraction = 1.0 keeps the df-cap out of the way so the BUCKET cap
     // is what does the dropping. Two genuinely near-dup docs with disjoint
     // vocabulary sit in small buckets and must survive.
@@ -213,9 +213,11 @@ class OpsSpec extends AnyFunSuite {
     val pair = Seq((5000L, s"$shared mu"), (5001L, s"$shared buzz"))
     val df = (hot ++ pair).toDF("doc_id", "text")
 
-    val mh = Dedup.minhashNearDups(df, "doc_id", "text",
+    val (mhPairs, mhCaches) = Dedup.minhashNearDupsTracked(df, "doc_id", "text",
       thresholdPct = 60, maxDfFraction = 1.0)
-      .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val mh = mhPairs.select("a", "b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    mhCaches.foreach(_.unpersist(blocking = true))
     assert(mh == Set((5000L, 5001L)),
       s"hot bucket must drop, honest pair must survive: $mh")
     // control: the raw uncapped operator DOES pair the hot docs
@@ -223,8 +225,10 @@ class OpsSpec extends AnyFunSuite {
       .count()
     assert(uncapped > 1100L * 1099 / 2)
 
-    val sh = Dedup.simhashNearDups(df, "doc_id", "text")
-      .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (shPairs, shCaches) = Dedup.simhashNearDupsTracked(df, "doc_id", "text")
+    val sh = shPairs.select("a", "b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    shCaches.foreach(_.unpersist(blocking = true))
     assert(sh == Set((5000L, 5001L)), s"simhash capped default: $sh")
   }
 

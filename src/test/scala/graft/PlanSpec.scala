@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.oracle.TriplesOracle
 
 /** Physical-plan contracts — the properties that make these operators hold
   * up at 100 TB, asserted against the ACTUAL executed plans so a regression
@@ -13,6 +18,18 @@ class PlanSpec extends AnyFunSuite {
   private def executedPlan(df: org.apache.spark.sql.DataFrame): String = {
     df.count() // materialize so AQE finalizes its plan
     df.queryExecution.executedPlan.toString
+  }
+
+  /** Every node of `df`'s executed plan — the FINAL adaptive plan once `df`
+    * itself has run — through AQE wrappers and query stages.
+    */
+  private def finalPlanNodes(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    nodes(df.queryExecution.executedPlan)
   }
 
   test("per-row text ops prune the parquet scan to the referenced columns") {
@@ -90,17 +107,25 @@ class PlanSpec extends AnyFunSuite {
     assert(!resumed0)
 
     // 1) the conv-grouped triples walk: required distribution satisfied by
-    //    the bucketed scan → no Exchange anywhere in the final plan
-    val walked = graft.pipeline.Triples.extractBucketed(bucketed)
-    val walkPlan = executedPlan(walked).split("== Initial Plan ==")(0)
-    assert(!walkPlan.contains("Exchange"),
-      s"bucket-aligned walk must not shuffle:\n$walkPlan")
-    // and it matches the one-shuffle walk on the same rows
+    //    the bucketed scan → no shuffle anywhere in the final plan
     def c(df: org.apache.spark.sql.DataFrame) = df
       .selectExpr("subj", "pred", "obj", "conv_id", "turn_idx", "round(score,6) AS s")
       .collect().map(_.toString).sorted.toSeq
-    assert(c(walked) == c(graft.pipeline.Triples.extractFast(mentions)))
-    assert(walked.count() > 0)
+    val walked = graft.pipeline.Triples.extract(bucketed)
+    val walkedRows = c(walked)
+    walked.collect() // run the frame itself so AQE finalizes ITS plan
+    val walkPlan = finalPlanNodes(walked)
+    assert(walkPlan.exists(_.isInstanceOf[org.apache.spark.sql.execution.MapGroupsExec]),
+      s"premise: the final plan holds the walk:\n${walkPlan.mkString("\n")}")
+    assert(walkPlan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"bucket-aligned walk must not shuffle:\n${walkPlan.mkString("\n")}")
+    // control: the same walk over the unbucketed rows does shuffle
+    val unbucketed = graft.pipeline.Triples.extract(mentions)
+    unbucketed.collect()
+    assert(finalPlanNodes(unbucketed).exists(_.isInstanceOf[ShuffleExchangeExec]))
+    // and it matches the windowed oracle on the same rows
+    assert(walkedRows == c(TriplesOracle.windowed(mentions)))
+    assert(walkedRows.nonEmpty)
 
     // 2) the co-reference groupBy (conv_id, base): clustering on a superset
     //    of the bucket key → aggregation is exchange-free too

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.PolyHash
-import graft.ops.TextAnalysis
+import graft.oracle.BuiltinOracle
 
 /** The native PolyHash expression must be bit-identical to the built-in
   * aggregate/ascii formulation (which the DuckDB oracles mirror) — including
@@ -18,7 +18,7 @@ class PolyHashSpec extends AnyFunSuite {
     val df = strings.toDF("s")
     val rows = df.select(
       PolyHash.poly_hash(col("s")).as("native"),
-      TextAnalysis.fingerprintBuiltin(col("s")).as("builtin")).collect()
+      BuiltinOracle.fingerprint(col("s")).as("builtin")).collect()
     rows.zip(strings).foreach { case (r, s) =>
       assert(r.getLong(0) == r.getLong(1), s"mismatch on ${s.take(40)}")
     }
@@ -57,17 +57,6 @@ class PolyHashSpec extends AnyFunSuite {
     })
   }
 
-  /** The HOF formulation the native ShingleHashes expression replaces (and
-    * the DuckDB decontamination oracle mirrors).
-    */
-  private def shingleBuiltin(textCol: org.apache.spark.sql.Column, n: Int) = {
-    val toks = filter(split(textCol, "\\s+"), t => length(t) > 0)
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => TextAnalysis.fingerprint(concat_ws(" ", slice(toks, i, lit(n))))))
-      .otherwise(array().cast("array<long>"))
-  }
-
   test("shingle_hashes == HOF formulation (crafted + property sweep, n=1..6)") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
@@ -82,7 +71,7 @@ class PolyHashSpec extends AnyFunSuite {
     for (n <- Seq(1, 2, 5, 6)) {
       val rows = df.select(col("s"),
         graft.functions.ShingleHashes.shingle_hashes(col("s"), n).as("native"),
-        shingleBuiltin(col("s"), n).as("builtin")).collect()
+        BuiltinOracle.shingles(col("s"), n).as("builtin")).collect()
       rows.foreach { r =>
         assert(r.getSeq[Long](1) == r.getSeq[Long](2),
           s"n=$n mismatch on '${r.getString(0).take(40)}'")

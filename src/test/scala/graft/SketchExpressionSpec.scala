@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.MinhashSigs
 import graft.functions.SimhashBitsExpr
 import graft.ops.Dedup
+import graft.oracle.BuiltinOracle
 
 /** The native MinhashSigs / SimhashBitsExpr expressions must be bit-identical
   * to the built-in HOF formulations they replace (which the DuckDB oracles
@@ -22,7 +23,7 @@ class SketchExpressionSpec extends AnyFunSuite {
   def checkMinhash(arrays: Seq[Seq[String]], numHashes: Int): Unit = {
     val rows = toksDf(arrays).select(
       MinhashSigs.minhash_sigs(col("toks"), numHashes).as("native"),
-      Dedup.minhashSigBuiltin(col("toks"), numHashes).as("builtin")).collect()
+      BuiltinOracle.minhashSig(col("toks"), numHashes).as("builtin")).collect()
     rows.zip(arrays).foreach { case (r, a) =>
       assert(r.getSeq[Any](0) == r.getSeq[Any](1),
         s"minhash mismatch on ${a.take(5)}")
@@ -32,7 +33,7 @@ class SketchExpressionSpec extends AnyFunSuite {
   def checkSimhash(arrays: Seq[Seq[String]]): Unit = {
     val rows = toksDf(arrays).select(
       SimhashBitsExpr.simhash_bits(col("toks"), 48).as("native"),
-      Dedup.simhashBitsBuiltin(col("toks")).as("builtin")).collect()
+      BuiltinOracle.simhashBits(col("toks")).as("builtin")).collect()
     rows.zip(arrays).foreach { case (r, a) =>
       assert(r.getSeq[Any](0) == r.getSeq[Any](1),
         s"simhash mismatch on ${a.take(5)}")
@@ -72,9 +73,9 @@ class SketchExpressionSpec extends AnyFunSuite {
     // (simhash) on a null token array — the when() wrapper reproduces that
     val r = df.select(
       Dedup.minhashSig(col("toks"), 8).as("mn"),
-      Dedup.minhashSigBuiltin(col("toks"), 8).as("mb"),
+      BuiltinOracle.minhashSig(col("toks"), 8).as("mb"),
       Dedup.simhashBits(col("toks")).as("sn"),
-      Dedup.simhashBitsBuiltin(col("toks")).as("sb")).collect()
+      BuiltinOracle.simhashBits(col("toks")).as("sb")).collect()
     r.foreach { row =>
       assert(row.isNullAt(0) == row.isNullAt(1))
       if (!row.isNullAt(0)) assert(row.getSeq[Any](0) == row.getSeq[Any](1))

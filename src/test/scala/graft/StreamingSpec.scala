@@ -5,13 +5,14 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.oracle.TriplesOracle
 import graft.pipeline.KgPipeline
 import graft.streaming.IncrementalKg
 import graft.synth.Synth
 
 /** Structured Streaming incremental append: a parquet-backed transcript
   * stream driven synchronously (AvailableNow + awaitTermination) must emit
-  * exactly the batch pipeline's triples.
+  * exactly the triples of the windowed batch oracle.
   */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -26,24 +27,37 @@ class StreamingSpec extends AnyFunSuite {
 
     val transcripts = Synth.transcripts(spark, 15, 5, nEnts, mProps)
     val srcDir = Files.createTempDirectory("stream-src").toString
-    transcripts.write.mode("overwrite").parquet(srcDir)
+    // one file = one micro-batch: no turn can arrive behind the watermark
+    transcripts.coalesce(1).write.mode("overwrite").parquet(srcDir)
 
-    val stream = spark.readStream
-      .schema(transcripts.schema)
-      .parquet(srcDir)
     val outDir = Files.createTempDirectory("stream-out").toString
     val ckDir = Files.createTempDirectory("stream-ck").toString
-    val q = IncrementalKg.triplesStream(stream, dict, outDir, "kgstream", ckDir)
-    q.awaitTermination(120000)
+    def runOnce(): Unit = {
+      val stream = spark.readStream.schema(transcripts.schema)
+        .option("maxFilesPerTrigger", 1).parquet(srcDir)
+      val q = IncrementalKg.statefulTriplesStream(stream, dict, outDir,
+        "kgstream", ckDir)
+      q.awaitTermination(120000)
+      assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
+      spark.streams.resetTerminated()
+    }
+    runOnce()
+    // the drained stream's buffered tail flushes once sentinels move the
+    // watermark past the last turn
+    val lastTs = transcripts.agg(max("ts")).head().getTimestamp(0).getTime
+    val surface = dict.filter(!col("is_prop")).select("surface").head().getString(0)
+    IncrementalKg.writeFlushSentinels(spark, srcDir, transcripts.schema, surface,
+      afterTsMillis = lastTs, watermarkDelayMillis = 10000L)
+    runOnce()
 
-    val got = spark.read.parquet(outDir)
-      .select("subj", "pred", "obj", "conv_id", "turn_idx")
-      .collect().map(_.toString).toSet
-    val want = graft.pipeline.Triples.extract(
-      graft.pipeline.Mentions.detectFast(transcripts, dict))
-      .select("subj", "pred", "obj", "conv_id", "turn_idx")
-      .collect().map(_.toString).toSet
-    assert(got == want)
+    def canon(df: org.apache.spark.sql.DataFrame) = df
+      .selectExpr("subj", "pred", "obj", "conv_id", "turn_idx", "round(score, 6) AS s")
+      .collect().map(_.toString).sorted.toSeq
+    val got = canon(spark.read.parquet(outDir))
+    val want = canon(TriplesOracle.windowed(
+      graft.pipeline.Mentions.detectFast(transcripts, dict)))
+    assert(got == want,
+      s"only-stream=${got.diff(want).take(5)} only-batch=${want.diff(got).take(5)}")
     assert(got.nonEmpty)
   }
 
@@ -115,7 +129,7 @@ class StreamingSpec extends AnyFunSuite {
       .selectExpr("subj", "pred", "obj", "conv_id", "turn_idx", "round(score, 6) AS s")
       .collect().map(_.toString).toSet
     val got = canon(spark.read.parquet(outDir))
-    val want = canon(graft.pipeline.Triples.extract(
+    val want = canon(TriplesOracle.windowed(
       graft.pipeline.Mentions.detectFast(corpus, dict)))
     assert(got == want,
       s"only-stream=${(got -- want).take(5)} only-batch=${(want -- got).take(5)}")
@@ -129,8 +143,8 @@ class StreamingSpec extends AnyFunSuite {
     // per-batch)
     val perBatch = canon {
       val m = graft.pipeline.Mentions.detectFast(corpus, dict)
-      graft.pipeline.Triples.extract(m.filter(col("turn_idx") < 3))
-        .unionByName(graft.pipeline.Triples.extract(m.filter(col("turn_idx") >= 3)))
+      TriplesOracle.windowed(m.filter(col("turn_idx") < 3))
+        .unionByName(TriplesOracle.windowed(m.filter(col("turn_idx") >= 3)))
     }
     assert((want -- perBatch).nonEmpty,
       "test corpus must contain a cross-batch-dependent triple")
@@ -175,7 +189,7 @@ class StreamingSpec extends AnyFunSuite {
     def got() = spark.read.parquet(outDir)
       .select("subj", "pred", "obj", "conv_id", "turn_idx")
       .collect().map(_.toString).toSet
-    val want = graft.pipeline.Triples.extract(
+    val want = TriplesOracle.windowed(
       graft.pipeline.Mentions.detectFast(corpus, dict))
       .select("subj", "pred", "obj", "conv_id", "turn_idx")
       .collect().map(_.toString).toSet
@@ -266,28 +280,6 @@ class StreamingSpec extends AnyFunSuite {
     val expired = run(ttlMs = 5000L) // 5s TTL ≪ the 60s idle gap: state dropped
     assert(!expired.exists(_.contains("c1,1")),
       s"expired focus must not seed the triple: $expired")
-  }
-
-  test("watermarked windowed mention rates run on a stream") {
-    val nEnts = 100L
-    val ents = Synth.entityDump(spark, nEnts)
-    val props = Synth.propertyDump(spark, 10)
-    val dict = KgPipeline.dictionary(
-      graft.index.EntityIndexBuilder.build(ents), ents,
-      graft.index.PropertyIndexBuilder.build(props), props)
-    val transcripts = Synth.transcripts(spark, 10, 4, nEnts, 10)
-    val srcDir = Files.createTempDirectory("stream-src2").toString
-    transcripts.write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream.schema(transcripts.schema).parquet(srcDir)
-    val agg = IncrementalKg.mentionRates(stream, dict)
-    val q = agg.writeStream.outputMode("append")
-      .format("memory").queryName("rates")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    // append mode only emits closed windows; with AvailableNow the watermark
-    // advances at the final batch — accept either emitted rows or a clean run
-    assert(q.exception.isEmpty)
   }
 
   test("streaming ingest dedup: in-run dups dropped, cross-run state survives the checkpoint") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VecFunctions
-import graft.ops.Similarity
+import graft.oracle.BuiltinOracle
 
 class VecExpressionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -21,7 +21,7 @@ class VecExpressionSpec extends AnyFunSuite {
   test("vec_dot == built-in aggregate/zip_with formulation") {
     val df = vecs()
       .withColumn("fused", VecFunctions.vec_dot(col("a"), col("b")))
-      .withColumn("builtin", Similarity.dotBuiltin(col("a"), col("b")))
+      .withColumn("builtin", BuiltinOracle.dot(col("a"), col("b")))
     val rows = df.collect()
     rows.foreach { r =>
       assert(math.abs(r.getAs[Double]("fused") - r.getAs[Double]("builtin")) < 1e-9,
@@ -68,7 +68,7 @@ class VecExpressionSpec extends AnyFunSuite {
       .toDF("id", "a", "b")
     val rows = df
       .withColumn("fused", VecFunctions.long_vec_dot(col("a"), col("b")))
-      .withColumn("builtin", Similarity.qdotBuiltin(col("a"), col("b")))
+      .withColumn("builtin", BuiltinOracle.qdot(col("a"), col("b")))
       .collect()
     rows.foreach { r =>
       assert(r.getAs[Long]("fused") == r.getAs[Long]("builtin"), s"id=${r.getLong(0)}")
@@ -85,7 +85,7 @@ class VecExpressionSpec extends AnyFunSuite {
       ovf.select(VecFunctions.long_vec_dot(col("a"), col("b"))).collect()
     }
     intercept[Exception] {
-      ovf.select(Similarity.qdotBuiltin(col("a"), col("b"))).collect()
+      ovf.select(BuiltinOracle.qdot(col("a"), col("b"))).collect()
     }
 
     // length mismatch: zip_with pads with null -> the sum poisons to NULL;
@@ -93,7 +93,7 @@ class VecExpressionSpec extends AnyFunSuite {
     val mm = Seq((1L, Array(1L, 2L, 3L), Array(1L, 1L)))
       .toDF("id", "a", "b")
       .withColumn("fused", VecFunctions.long_vec_dot(col("a"), col("b")))
-      .withColumn("builtin", Similarity.qdotBuiltin(col("a"), col("b")))
+      .withColumn("builtin", BuiltinOracle.qdot(col("a"), col("b")))
       .collect()(0)
     assert(mm.isNullAt(3) && mm.isNullAt(4), s"length mismatch must be NULL: $mm")
 
@@ -110,7 +110,7 @@ class VecExpressionSpec extends AnyFunSuite {
       .select(VecFunctions.long_vec_dot(col("a"), col("b"))).collect()(0)
     assert(fusedRow.isNullAt(0), "fused loop: NULL before overflow -> NULL")
     intercept[Exception] {
-      nullThenOvf.select(Similarity.qdotBuiltin(col("a"), col("b"))).collect()
+      nullThenOvf.select(BuiltinOracle.qdot(col("a"), col("b"))).collect()
     }
 
     // null input -> null; SQL registration via the session extension name
